@@ -230,7 +230,7 @@ def q_count_collector(spark, sf_dir):
 
 # ------------------------------------------- block-codec engine gates
 # These two entries run the REAL engine end-to-end: IndexBuilder writes
-# delta+varint posting blocks (build/codec.py) to a temp dir, SearchEngine
+# list-column posting blocks (build/codec.py) to a temp dir, SearchEngine
 # decodes them (query/engine.py _decode) and answers BM25 top-k — so the
 # driver's DuckDB oracle exercises the codec path, not just the
 # plans/relational.py twins (VERDICT r3 "Next round" #3). The index build
@@ -287,7 +287,7 @@ def _engine_search_df(
 
 def q_engine_term_bm25(spark, sf_dir):
     """BM25 top-10 for 'spark' answered by the block-codec SearchEngine
-    (posting-block scan -> numpy varint decode -> JVM scoring ->
+    (posting-block scan -> JVM list-column explode -> JVM scoring ->
     TakeOrderedAndProject), built from the same documents table the
     DuckDB oracle sees. Reference: tantivy block postings decode;
     bayard/src/search/query/term.rs."""
@@ -299,8 +299,8 @@ def q_engine_term_bm25(spark, sf_dir):
 
 def q_engine_phrase_bm25(spark, sf_dir):
     """Positions-recorded phrase query ("hash join", slop 0) through the
-    codec engine: per-term position arrays decode from pos_bytes blocks
-    and the vectorized adjacency sweep verifies matches
+    codec engine: per-term position arrays explode from the positions
+    list column and the JVM adjacency sweep verifies matches
     (bayard/src/search/query/phrase.rs:13-33)."""
     return _engine_search_df(
         spark, sf_dir,
@@ -3270,7 +3270,7 @@ ORDER BY doc_id
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: BM25 top-10 for 'spark' on sf0.001 documents, answered by
-    the REAL engine end-to-end — IndexBuilder writes delta+varint posting
+    the REAL engine end-to-end — IndexBuilder writes list-column posting
     blocks, SearchEngine decodes and scores them (round 4: the smoke test
     exercises the codec path, not just the relational twin)."""
     return q_engine_term_bm25(spark, "/root/testdata/sf0.001")

@@ -7,8 +7,9 @@ re-expressed Spark-first:
 - analysis/   vectorized (Arrow/pandas) analyzer pipelines: tokenizers + filters
               mirroring bayard/src/index/tokenizer/* and token_filter/*
 - build/      distributed inverted-index build: postings / docs / norms / stats
-              tables with term-hash bucketing, hot-term salting, delta+varint
-              block compression, per-partition lineage (resumable)
+              tables with term-hash bucketing, hot-term salting, 128-doc
+              blocks as zstd Parquet list columns, per-partition lineage
+              (resumable)
 - query/      the 9-kind JSON query DSL (bayard/src/search/query.rs:74-132)
               compiled to DataFrame plans; BM25 (k1=1.2, b=0.75) top-k
 - sources/    deterministic Common-Crawl-style webtext synthesis + HTML

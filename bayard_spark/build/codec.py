@@ -1,234 +1,202 @@
-"""Delta + varint block codec for posting lists — numpy-vectorized.
+"""Posting-block layout: 128-doc blocks stored as Parquet list columns.
 
-Postings for a (field, term) are stored as fixed-size blocks (128 docs, the
-same block size tantivy uses for its bitpacked postings) with per-block
-metadata materialized as PLAIN COLUMNS of the postings table:
+Postings for a (field, term, salt) are cut into fixed-size blocks (128 docs,
+the block size tantivy uses for its bitpacked postings). Each block is ONE
+row of the postings table:
 
-    n_docs, first_doc_id, last_doc_id, max_tf, min_len
+    field, bucket, term, salt, block_id       key (field/bucket = partitions)
+    n_docs, first_doc_id, last_doc_id,
+    max_tf, min_tf, min_len, max_len           block-max metadata
+    doc_offsets : array<bigint>        doc_id - first_doc_id, ascending
+    tfs         : array<int>           term frequency per doc
+    lens        : array<int>           field length per doc (BM25 norm)
+    positions   : array<array<int>>    token positions per doc, ascending;
+                                       null when the field records no
+                                       positions
 
-so that block-max WAND pruning and doc-range skipping happen as ordinary
-Catalyst filters on the parquet scan (min/max page stats + predicate
-pushdown) BEFORE any Python decode touches the block bytes. The payload
-columns are:
+The metadata columns are PLAIN COLUMNS, so block-max pruning and doc-range
+skipping happen as ordinary Catalyst filters on the parquet scan. The
+payload is not hand-encoded: Parquet (zstd, `POSTINGS_COMPRESSION`) does the
+compression, and readers decode with ONE JVM projection (`explode_blocks`:
+`inline(arrays_zip(...))`) — no Python runs between the scan and the scorer.
 
-    doc_bytes : varint(delta(doc_ids))          (deltas of sorted doc ids)
-    tf_bytes  : varint(tf per doc)
-    pos_bytes : varint(delta(positions)) per doc, concatenated in doc order
-                (tf_i values give the per-doc position counts; empty when the
-                field records freq only)
-
-Encode/decode are whole-array numpy kernels (no per-value Python loops):
-encode loops over the ≤10 varint byte slots, decode reconstructs values with
-a segmented shift-or. Round-trip is exact for uint64 < 2^63.
+`encode_group_table` is the only writer of this layout; the bulk builder,
+segment staging and the merge compactor all call it, so a block's content
+depends only on its postings, never on the path that wrote it.
 
 This is an original layout informed by public IR practice (tantivy's 128-doc
-blocks + skip info; Lucene's block-max metadata); no reference code reused.
+blocks + skip info; Lucene's block-max metadata; columnar list-typed posting
+storage); no reference code reused.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 BLOCK_SIZE = 128
-_MAX_VARINT_BYTES = 10
+POSTINGS_COMPRESSION = "zstd"
+
+BLOCK_SCHEMA = (
+    "field string, bucket int, term string, salt int, block_id int, "
+    "n_docs int, first_doc_id long, last_doc_id long, max_tf int, "
+    "min_tf int, min_len int, max_len int, doc_offsets array<long>, "
+    "tfs array<int>, lens array<int>, positions array<array<int>>"
+)
+_POS_TYPE = pa.list_(pa.int32())
+_BLOCK_ARROW_SCHEMA = pa.schema(
+    [
+        ("field", pa.string()), ("bucket", pa.int32()),
+        ("term", pa.string()), ("salt", pa.int32()),
+        ("block_id", pa.int32()), ("n_docs", pa.int32()),
+        ("first_doc_id", pa.int64()), ("last_doc_id", pa.int64()),
+        ("max_tf", pa.int32()), ("min_tf", pa.int32()),
+        ("min_len", pa.int32()), ("max_len", pa.int32()),
+        ("doc_offsets", pa.list_(pa.int64())),
+        ("tfs", pa.list_(pa.int32())),
+        ("lens", pa.list_(pa.int32())),
+        ("positions", pa.list_(_POS_TYPE)),
+    ]
+)
 
 
-def varint_lengths(values: np.ndarray) -> np.ndarray:
-    """Per-value LEB128 byte length (number of 7-bit groups), vectorized."""
-    v = np.asarray(values, dtype=np.uint64)
-    nbytes = np.ones(v.shape, dtype=np.int64)
-    for k in range(1, _MAX_VARINT_BYTES):
-        mask = v >= (np.uint64(1) << np.uint64(7 * k))
-        if not mask.any():
-            break
-        nbytes += mask.astype(np.int64)
-    return nbytes
+class IndexFormatError(RuntimeError):
+    """The index was written in a posting layout this version cannot read
+    (e.g. the earlier varint-blob columns); rebuild it from its source."""
 
 
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128-encode a uint64 array, vectorized."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    nbytes = varint_lengths(v)
-    total = int(nbytes.sum())
-    out = np.zeros(total, dtype=np.uint8)
-    ends = np.cumsum(nbytes)
-    starts = ends - nbytes
-    for k in range(_MAX_VARINT_BYTES):
-        sel = nbytes > k
-        if not sel.any():
-            break
-        chunk = ((v[sel] >> np.uint64(7 * k)) & np.uint64(0x7F)).astype(np.uint8)
-        cont = (nbytes[sel] > k + 1).astype(np.uint8) << 7
-        out[starts[sel] + k] = chunk | cont
-    return out.tobytes()
+def require_list_layout(postings: DataFrame) -> DataFrame:
+    """Raise IndexFormatError unless `postings` carries the list columns."""
+    if "doc_offsets" not in postings.columns:
+        raise IndexFormatError(
+            "rebuild required: this index stores postings in an older "
+            "layout (columns "
+            f"{sorted(set(postings.columns) - {'field', 'bucket', 'term'})}); "
+            "rebuild it with IndexBuilder.build"
+        )
+    return postings
 
 
-def varint_decode(buf: bytes | bytearray | memoryview) -> np.ndarray:
-    """Decode LEB128 bytes → uint64 array, vectorized."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=np.uint64)
-    is_end = (b & 0x80) == 0
-    n_vals = int(is_end.sum())
-    # group id of each byte = count of ends before it
-    group = np.zeros(b.size, dtype=np.int64)
-    group[1:] = np.cumsum(is_end[:-1])
-    # position within group
-    group_starts = np.zeros(n_vals, dtype=np.int64)
-    ends_idx = np.flatnonzero(is_end)
-    group_starts[1:] = ends_idx[:-1] + 1
-    pos_in_group = np.arange(b.size, dtype=np.int64) - group_starts[group]
-    vals = np.zeros(n_vals, dtype=np.uint64)
-    contrib = (b & np.uint8(0x7F)).astype(np.uint64) << (
-        np.uint64(7) * pos_in_group.astype(np.uint64)
-    )
-    np.add.at(vals, group, contrib)
-    return vals
+def encode_group_table(table: pa.Table, block_size: int = BLOCK_SIZE) -> pa.Table:
+    """Posting rows of one (bucket, salt) group → block rows (BLOCK_SCHEMA).
 
-
-def varint_decode_many(
-    buf, chunk_offsets: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Decode N concatenated varint streams in ONE vectorized pass.
-
-    `buf` holds the streams back to back; `chunk_offsets` (int64, N+1) are
-    the byte offsets delimiting them. Returns `(values, value_offsets)`
-    where `value_offsets` (N+1) slices `values` per stream.
-
-    This is the batch form of `varint_decode`: one numpy kernel decodes an
-    entire Arrow batch of posting blocks instead of one Python call per
-    block (the per-call overhead dominated hot-term decode — ~32 µs/call ×
-    3 streams × df/128 blocks). Values never span chunk boundaries (each
-    chunk is a complete stream), so the per-stream value counts fall out of
-    a searchsorted over the value-end byte positions.
+    Input columns: doc_id, field, term, tf, doc_len, positions (list<int>,
+    null for position-less fields), bucket, salt. Terms stay dictionary-coded
+    ints: one lexsort over (field, term, salt, doc_id), run and block
+    boundaries vectorized, and every payload column is a zero-copy ListArray
+    whose offsets are the block boundaries. Python work is O(1) per group.
     """
-    b = np.frombuffer(buf, dtype=np.uint8)
-    offs = np.asarray(chunk_offsets, dtype=np.int64)
-    if b.size == 0:
-        return np.empty(0, dtype=np.uint64), np.zeros(offs.size, dtype=np.int64)
-    is_end = (b & 0x80) == 0
-    if is_end.all():
-        # every value fits in 7 bits (the common case for doc-id deltas and
-        # tfs): bytes ARE the values, offsets carry over unchanged
-        return b.astype(np.uint64), offs.copy()
-    ends_idx = np.flatnonzero(is_end)
-    n_vals = ends_idx.size
-    group = np.zeros(b.size, dtype=np.int64)
-    group[1:] = np.cumsum(is_end[:-1])
-    group_starts = np.zeros(n_vals, dtype=np.int64)
-    group_starts[1:] = ends_idx[:-1] + 1
-    pos_in_group = np.arange(b.size, dtype=np.int64) - group_starts[group]
-    contrib = (b & np.uint8(0x7F)).astype(np.uint64) << (
-        np.uint64(7) * pos_in_group.astype(np.uint64)
+    n = table.num_rows
+    if n == 0:
+        return _BLOCK_ARROW_SCHEMA.empty_table()
+    fenc = pc.dictionary_encode(table.column("field").combine_chunks())
+    tenc = pc.dictionary_encode(table.column("term").combine_chunks())
+    fcodes = fenc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    tcodes = tenc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    doc = table.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
+    tf = table.column("tf").to_numpy(zero_copy_only=False).astype(np.int32)
+    dlen = table.column("doc_len").to_numpy(zero_copy_only=False).astype(np.int32)
+    salt = table.column("salt").to_numpy(zero_copy_only=False).astype(np.int64)
+    bucket = int(table.column("bucket")[0].as_py())
+
+    order = np.lexsort((doc, salt, tcodes, fcodes))
+    fcodes, tcodes, salt = fcodes[order], tcodes[order], salt[order]
+    doc, tf, dlen = doc[order], tf[order], dlen[order]
+
+    new_run = np.empty(n, dtype=bool)
+    new_run[0] = True
+    new_run[1:] = (
+        (fcodes[1:] != fcodes[:-1])
+        | (tcodes[1:] != tcodes[:-1])
+        | (salt[1:] != salt[:-1])
     )
-    # per-value sum of contributions: group ids are ascending, so this is a
-    # contiguous segmented reduce — np.add.reduceat, not the scattered (and
-    # ~10x slower) np.add.at of the single-stream decoder
-    vals = np.add.reduceat(contrib, group_starts)
-    value_offsets = np.searchsorted(ends_idx, offs, side="left")
-    return vals, value_offsets
+    run_start_of = np.maximum.accumulate(np.where(new_run, np.arange(n), 0))
+    within = np.arange(n) - run_start_of
+    bstarts = np.flatnonzero(new_run | (within % block_size == 0))
+    bends = np.append(bstarts[1:], n)
+    nb = len(bstarts)
+    first = doc[bstarts]
+    # blocks tile the sorted group, so the block boundaries ARE the list
+    # offsets of every payload column
+    block_offsets = pa.array(np.append(bstarts, n).astype(np.int32))
+
+    def per_block(values: pa.Array, mask=None) -> pa.ListArray:
+        return pa.ListArray.from_arrays(block_offsets, values, mask=mask)
+
+    pos_col = table.column("positions").combine_chunks()
+    if pos_col.null_count == n:
+        positions = pa.nulls(nb, type=pa.list_(_POS_TYPE))
+    else:
+        # a group mixes fields; blocks of a position-less field stay null
+        valid = pos_col.is_valid().to_numpy(zero_copy_only=False)[order]
+        block_null = ~valid[bstarts]
+        positions = per_block(
+            pos_col.take(pa.array(order)),
+            mask=pa.array(block_null) if block_null.any() else None,
+        )
+
+    return pa.Table.from_arrays(
+        [
+            pa.DictionaryArray.from_arrays(
+                pa.array(fcodes[bstarts].astype(np.int32)), fenc.dictionary
+            ).cast(pa.string()),
+            pa.array(np.full(nb, bucket, dtype=np.int32)),
+            pa.DictionaryArray.from_arrays(
+                pa.array(tcodes[bstarts].astype(np.int32)), tenc.dictionary
+            ).cast(pa.string()),
+            pa.array(salt[bstarts].astype(np.int32)),
+            pa.array((within[bstarts] // block_size).astype(np.int32)),
+            pa.array((bends - bstarts).astype(np.int32)),
+            pa.array(first),
+            pa.array(doc[bends - 1]),
+            pa.array(np.maximum.reduceat(tf, bstarts)),
+            pa.array(np.minimum.reduceat(tf, bstarts)),
+            pa.array(np.minimum.reduceat(dlen, bstarts)),
+            pa.array(np.maximum.reduceat(dlen, bstarts)),
+            per_block(pa.array(doc - np.repeat(first, bends - bstarts))),
+            per_block(pa.array(tf)),
+            per_block(pa.array(dlen)),
+            positions,
+        ],
+        schema=_BLOCK_ARROW_SCHEMA,
+    )
 
 
-def delta_decode_segments(
-    deltas: np.ndarray, value_offsets: np.ndarray
-) -> np.ndarray:
-    """Segmented delta-decode: cumsum within each `value_offsets` slice,
-    where the FIRST value of each segment is absolute (delta_encode keeps
-    v[0]). One global cumsum, then each segment subtracts the running total
-    at its start; uint64 wraparound cancels exactly in the subtraction, so
-    the result is exact whenever the true values fit in uint64."""
-    d = np.asarray(deltas, dtype=np.uint64)
-    offs = np.asarray(value_offsets, dtype=np.int64)
-    c = np.cumsum(d, dtype=np.uint64)
-    starts = offs[:-1]
-    base = np.where(starts > 0, c[np.maximum(starts - 1, 0)], np.uint64(0))
-    with np.errstate(over="ignore"):
-        return c - np.repeat(base, np.diff(offs))
+def write_blocks(blocks: DataFrame, path: str) -> None:
+    """Write block rows as the postings layout under `path`."""
+    (
+        blocks.write.mode("overwrite")
+        .option("compression", POSTINGS_COMPRESSION)
+        .partitionBy("field", "bucket")
+        .parquet(path)
+    )
 
 
-def delta_encode(sorted_vals: np.ndarray) -> np.ndarray:
-    v = np.asarray(sorted_vals, dtype=np.uint64)
-    if v.size == 0:
-        return v
-    out = np.empty_like(v)
-    out[0] = v[0]
-    with np.errstate(over="ignore"):
-        out[1:] = v[1:] - v[:-1]
-    return out
+def explode_blocks(
+    blocks: DataFrame, *keep: str, positions: bool = False
+) -> DataFrame:
+    """Block rows → one row per posting: keep..., doc_id, tf, len
+    [, positions], as ONE JVM generator projection (no Python).
 
-
-def delta_decode(deltas: np.ndarray) -> np.ndarray:
-    d = np.asarray(deltas, dtype=np.uint64)
-    return np.cumsum(d, dtype=np.uint64)
-
-
-def split_pos_bytes(pos_bytes: bytes, tfs: np.ndarray) -> list[bytes]:
-    """Slice a block's concatenated position stream back into per-doc byte
-    runs (doc k holds tfs[k] varint values)."""
-    b = np.frombuffer(pos_bytes, dtype=np.uint8)
-    is_end = (b & 0x80) == 0
-    value_end_bytes = np.flatnonzero(is_end) + 1  # exclusive byte offset
-    offs = np.zeros(len(tfs) + 1, dtype=np.int64)
-    np.cumsum(np.asarray(tfs, dtype=np.int64), out=offs[1:])
-    out = []
-    prev = 0
-    for k in range(len(tfs)):
-        end = int(value_end_bytes[offs[k + 1] - 1]) if offs[k + 1] > 0 else 0
-        out.append(pos_bytes[prev:end])
-        prev = end
-    return out
-
-
-def encode_block(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    positions: np.ndarray | None = None,
-    pos_doc_offsets: np.ndarray | None = None,
-) -> tuple[bytes, bytes, bytes]:
-    """Encode ONE block (≤ BLOCK_SIZE docs, doc_ids sorted ascending).
-
-    positions/pos_doc_offsets: flattened positions for the block's docs and
-    the per-doc start offsets into it (len = n_docs + 1). Positions are
-    delta-encoded within each doc.
+    With positions=True, blocks of position-less fields yield null
+    positions instead of being dropped (arrays_zip of a null list is null).
     """
-    doc_ids = np.asarray(doc_ids, dtype=np.uint64)
-    tfs = np.asarray(tfs, dtype=np.uint64)
-    doc_bytes = varint_encode(delta_encode(doc_ids))
-    tf_bytes = varint_encode(tfs)
-    if positions is None or len(positions) == 0:
-        return doc_bytes, tf_bytes, b""
-    positions = np.asarray(positions, dtype=np.uint64)
-    offs = np.asarray(pos_doc_offsets, dtype=np.int64)
-    # per-doc delta: subtract previous position, reset at doc starts
-    deltas = positions.copy()
-    with np.errstate(over="ignore"):
-        deltas[1:] = positions[1:] - positions[:-1]
-    starts = offs[:-1]
-    starts = starts[starts < positions.size]
-    deltas[starts] = positions[starts]
-    return doc_bytes, tf_bytes, varint_encode(deltas)
-
-
-def decode_block(
-    doc_bytes: bytes,
-    tf_bytes: bytes,
-    pos_bytes: bytes | None = None,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray | None, np.ndarray | None]:
-    """Decode one block → (doc_ids, tfs, positions|None, pos_doc_offsets|None)."""
-    doc_ids = delta_decode(varint_decode(doc_bytes))
-    tfs = varint_decode(tf_bytes)
-    if not pos_bytes:
-        return doc_ids, tfs, None, None
-    deltas = varint_decode(pos_bytes)
-    offs = np.zeros(tfs.size + 1, dtype=np.int64)
-    np.cumsum(tfs.astype(np.int64), out=offs[1:])
-    # segmented cumsum: global cumsum, then subtract the running total at
-    # each doc's start so every doc restarts from its own absolute first pos
-    c = np.cumsum(deltas, dtype=np.uint64)
-    starts = offs[:-1]
-    doc_base = np.where(starts > 0, c[np.maximum(starts - 1, 0)], np.uint64(0))
-    with np.errstate(over="ignore"):
-        positions = c - np.repeat(doc_base, np.diff(offs))
-    return doc_ids, tfs, positions, offs
+    first = F.col("first_doc_id")
+    arrays = [
+        F.transform("doc_offsets", lambda o: o + first).alias("doc_id"),
+        F.col("tfs").alias("tf"),
+        F.col("lens").alias("len"),
+    ]
+    if positions:
+        arrays.append(
+            F.coalesce(
+                F.col("positions"),
+                F.array_repeat(
+                    F.lit(None).cast("array<int>"), F.col("n_docs")
+                ),
+            ).alias("positions")
+        )
+    return blocks.select(*keep, F.inline(F.arrays_zip(*arrays)))

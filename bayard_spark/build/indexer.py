@@ -13,8 +13,9 @@ batches):
     │    doc_len — shuffle volume is postings, not token occurrences
     ├─ postings_staging/  parquet, partitioned by wave (= bucket % num_waves)
     │ 4. term df agg → hot-term set (df > hot_df_threshold) → salting plan
-    │ 5. per wave: groupBy(bucket, term, salt) → applyInPandas block encoder
-    │    (delta+varint, 128-doc blocks, block-max metadata as plain columns)
+    │ 5. per wave: groupBy(bucket, salt) → applyInArrow block encoder
+    │    (128-doc blocks as Parquet list columns, block-max metadata as
+    │    plain columns; build/codec.py)
     ├─ postings/field=<f>/bucket=<b>/  parquet
     ├─ norms/   (field, doc_id, len)   — exact lengths (SURVEY §2.7)
     ├─ stats/   (field, n_docs, total_len, avg_len)
@@ -47,23 +48,19 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bayard_spark.analysis.analyzer import Analyzer, build_analyzers
-from bayard_spark.build.codec import encode_block, varint_encode, varint_lengths
+from bayard_spark.build.codec import (
+    BLOCK_SCHEMA,
+    encode_group_table,
+    explode_blocks,
+    write_blocks,
+)
 from bayard_spark.schema import IndexMeta, IndexPaths
 
-# positions are ALREADY delta+varint encoded per (doc, term) at analyzer
-# time — one vectorized encode over the whole Arrow batch, zero-copy sliced
-# into a BinaryArray. Block building then only concatenates bytes, and the
-# block codec's segmented decode (absolute first position per doc) reads the
-# concatenation directly.
+# one row per (doc, field, term): positions are the token positions of the
+# term in the doc, ascending (null for fields that record no positions)
 POSTING_ROW_SCHEMA = (
     "doc_id long, field string, term string, tf int, doc_len int, "
-    "pos_bytes binary"
-)
-BLOCK_SCHEMA = (
-    "field string, bucket int, term string, salt int, block_id int, "
-    "n_docs int, first_doc_id long, last_doc_id long, max_tf int, "
-    "min_tf int, min_len int, max_len int, doc_bytes binary, "
-    "tf_bytes binary, len_bytes binary, pos_bytes binary"
+    "positions array<int>"
 )
 
 
@@ -80,9 +77,8 @@ def _runs_to_record_batch(
     integer np.lexsort — sorting 10^6+ Python string objects is memory-
     latency-bound and stops scaling beyond a few cores; int sorts don't.
     Run-length boundaries then give (doc, term) groups: tf from run lengths,
-    positions delta-encoded in one pass with run starts reset to absolute,
-    varint-encoded as ONE array, and zero-copy sliced into a BinaryArray via
-    run byte-offsets.
+    and the sorted positions become one list<int> column whose offsets are
+    the run starts.
     """
     n = len(frame)
     if n == 0:
@@ -159,251 +155,19 @@ def _runs_from_ints(
         pa.array(doc_len_per_idx[run_idx], type=pa.int32()),
     ]
     if want_pos:
-        deltas = pos.copy()
-        deltas[1:] -= pos[:-1]
-        deltas[starts] = pos[starts]
-        u = deltas.astype(np.uint64)
-        enc = varint_encode(u)
-        blens = varint_lengths(u)
-        byte_ends = np.cumsum(blens)
-        offsets = np.zeros(len(starts) + 1, dtype=np.int32)
-        offsets[1:] = byte_ends[ends - 1]
+        # the runs tile the sorted stream, so their starts are the list
+        # offsets over the sorted positions — one int32 array per batch
         arrays.append(
-            pa.BinaryArray.from_buffers(
-                pa.binary(),
-                len(starts),
-                [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(enc)],
+            pa.ListArray.from_arrays(
+                pa.array(np.append(starts, n).astype(np.int32)),
+                pa.array(pos.astype(np.int32)),
             )
         )
     else:
-        arrays.append(pa.nulls(len(starts), type=pa.binary()))
+        arrays.append(pa.nulls(len(starts), type=pa.list_(pa.int32())))
     return pa.RecordBatch.from_arrays(
-        arrays, ["doc_id", "field", "term", "tf", "doc_len", "pos_bytes"]
+        arrays, ["doc_id", "field", "term", "tf", "doc_len", "positions"]
     )
-
-
-def encode_group_frame(pdf: pd.DataFrame, block_size: int = 128) -> pd.DataFrame:
-    """pandas frame of posting rows (doc_id, field, term, tf, doc_len,
-    pos_bytes, bucket, salt) → block rows (BLOCK_SCHEMA). Shared by the bulk
-    builder, incremental segment writer, and the merge compactor so block
-    bytes are identical regardless of which path wrote them.
-
-    pos_bytes per posting are already delta+varint framed (absolute first
-    position per doc), so a block's pos_bytes is a plain concatenation —
-    no position re-encoding ever happens after the analyzer pass."""
-    pdf = pdf.sort_values(["field", "term", "salt", "doc_id"], ignore_index=True)
-    out_rows = []
-    for (fld, term, salt), g in pdf.groupby(["field", "term", "salt"], sort=False):
-        doc_ids = g["doc_id"].to_numpy(dtype=np.int64)
-        tfs = g["tf"].to_numpy(dtype=np.uint64)
-        lens = g["doc_len"].to_numpy(dtype=np.uint64)
-        has_pos = g["pos_bytes"].iloc[0] is not None
-        pos_list = g["pos_bytes"].tolist() if has_pos else None
-        bucket = int(g["bucket"].iloc[0])
-        n = len(g)
-        starts = np.arange(0, n, block_size)
-        ends = np.minimum(starts + block_size, n)
-        # whole-group varint encodes, sliced at block byte-boundaries —
-        # per-block work is O(1) byte slicing, all math is vectorized
-        deltas = doc_ids.astype(np.uint64).copy()
-        with np.errstate(over="ignore"):
-            deltas[1:] -= doc_ids[:-1].astype(np.uint64)
-        deltas[starts] = doc_ids[starts].astype(np.uint64)  # blocks self-contained
-        enc_d = varint_encode(deltas)
-        off_d = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(varint_lengths(deltas), out=off_d[1:])
-        enc_t = varint_encode(tfs)
-        off_t = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(varint_lengths(tfs), out=off_t[1:])
-        enc_l = varint_encode(lens)
-        off_l = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(varint_lengths(lens), out=off_l[1:])
-        max_tf = np.maximum.reduceat(tfs, starts)
-        min_tf = np.minimum.reduceat(tfs, starts)
-        max_len = np.maximum.reduceat(lens, starts)
-        min_len = np.minimum.reduceat(lens, starts)
-        for bi in range(len(starts)):
-            b0, b1 = int(starts[bi]), int(ends[bi])
-            out_rows.append(
-                (fld, bucket, term, int(salt), bi, b1 - b0,
-                 int(doc_ids[b0]), int(doc_ids[b1 - 1]),
-                 int(max_tf[bi]), int(min_tf[bi]),
-                 int(min_len[bi]), int(max_len[bi]),
-                 enc_d[off_d[b0]:off_d[b1]],
-                 enc_t[off_t[b0]:off_t[b1]],
-                 enc_l[off_l[b0]:off_l[b1]],
-                 b"".join(pos_list[b0:b1]) if has_pos else b"")
-            )
-    cols = [c.split(" ")[0] for c in BLOCK_SCHEMA.split(", ")]
-    return pd.DataFrame(out_rows, columns=cols)
-
-
-def encode_group_table(table: pa.Table, block_size: int = 128) -> pa.Table:
-    """Arrow-native block encoder for one (bucket, salt) group.
-
-    Same output as encode_group_frame (byte-identical blocks), but terms
-    stay dictionary-encoded ints end-to-end: one lexsort over (field, term,
-    salt, doc_id) int codes, run/block boundaries vectorized, ONE varint
-    pass per payload column for the whole group, per-block byte slicing.
-    Python work is O(#blocks), not O(#postings).
-    """
-    n = table.num_rows
-    cols = [c.split(" ")[0] for c in BLOCK_SCHEMA.split(", ")]
-    if n == 0:
-        return pa.table(
-            {c: pa.array([], type=t) for c, t in zip(cols, _BLOCK_TYPES)}
-        )
-    fenc = pc.dictionary_encode(table.column("field").combine_chunks())
-    tenc = pc.dictionary_encode(table.column("term").combine_chunks())
-    fcodes = fenc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    tcodes = tenc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    fdict = fenc.dictionary.to_pylist()
-    tdict = tenc.dictionary
-    doc = table.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
-    tf = table.column("tf").to_numpy(zero_copy_only=False).astype(np.uint64)
-    dlen = table.column("doc_len").to_numpy(zero_copy_only=False).astype(np.uint64)
-    salt = table.column("salt").to_numpy(zero_copy_only=False).astype(np.int64)
-    bucket = int(table.column("bucket")[0].as_py())
-    pos_col = table.column("pos_bytes").combine_chunks()
-    has_pos = pos_col.null_count < n
-
-    order = np.lexsort((doc, salt, tcodes, fcodes))
-    fcodes, tcodes, salt = fcodes[order], tcodes[order], salt[order]
-    doc, tf, dlen = doc[order], tf[order], dlen[order]
-
-    new_run = np.empty(n, dtype=bool)
-    new_run[0] = True
-    new_run[1:] = (
-        (fcodes[1:] != fcodes[:-1])
-        | (tcodes[1:] != tcodes[:-1])
-        | (salt[1:] != salt[:-1])
-    )
-    run_start_of = np.maximum.accumulate(
-        np.where(new_run, np.arange(n), 0)
-    )
-    within = np.arange(n) - run_start_of
-    block_start = new_run | (within % block_size == 0)
-    bstarts = np.flatnonzero(block_start)
-    bends = np.append(bstarts[1:], n)
-    block_id = (within[bstarts] // block_size).astype(np.int32)
-
-    # payload encodes: one varint pass per column, deltas reset per block
-    deltas = doc.astype(np.uint64).copy()
-    with np.errstate(over="ignore"):
-        deltas[1:] -= doc[:-1].astype(np.uint64)
-    deltas[bstarts] = doc[bstarts].astype(np.uint64)
-    enc_d, len_d = varint_encode(deltas), varint_lengths(deltas)
-    enc_t, len_t = varint_encode(tf), varint_lengths(tf)
-    enc_l, len_l = varint_encode(dlen), varint_lengths(dlen)
-    off_d = np.zeros(n + 1, dtype=np.int64); np.cumsum(len_d, out=off_d[1:])
-    off_t = np.zeros(n + 1, dtype=np.int64); np.cumsum(len_t, out=off_t[1:])
-    off_l = np.zeros(n + 1, dtype=np.int64); np.cumsum(len_l, out=off_l[1:])
-
-    max_tf = np.maximum.reduceat(tf, bstarts).astype(np.int32)
-    min_tf = np.minimum.reduceat(tf, bstarts).astype(np.int32)
-    max_len = np.maximum.reduceat(dlen, bstarts).astype(np.int32)
-    min_len = np.minimum.reduceat(dlen, bstarts).astype(np.int32)
-
-    nb = len(bstarts)
-    bidx = np.append(bstarts, n)
-
-    def _block_binary(enc: bytes, off: np.ndarray):
-        """Per-block payload column WITHOUT per-block Python: blocks tile
-        the group, so the block byte ranges are just off[bidx] — one
-        zero-copy BinaryArray over the whole-group encode buffer
-        (r7; the old per-block slice list comps were ~4 Python
-        objects per block × ~700k blocks per 960k-doc build). int64
-        offsets (a single group's payload could pass 2 GiB at extreme
-        scale) would need LargeBinary — fall back to slicing then."""
-        boff = off[bidx]
-        if boff[-1] < (1 << 31):
-            return pa.BinaryArray.from_buffers(
-                pa.binary(),
-                nb,
-                [
-                    None,
-                    pa.py_buffer(boff.astype(np.int32).tobytes()),
-                    pa.py_buffer(enc),
-                ],
-            )
-        return pa.array(
-            [enc[off[bidx[i]]:off[bidx[i + 1]]] for i in range(nb)],
-            type=pa.binary(),
-        )
-
-    doc_bytes = _block_binary(enc_d, off_d)
-    tf_bytes = _block_binary(enc_t, off_t)
-    len_bytes = _block_binary(enc_l, off_l)
-
-    if has_pos:
-        # gather the (sorted-order) per-row byte runs into one buffer with a
-        # vectorized index build, then slice per block
-        poffs = pos_col.buffers()[1]
-        pvals = np.frombuffer(pos_col.buffers()[2], dtype=np.uint8)
-        a0 = pos_col.offset
-        poff = (
-            np.frombuffer(poffs, dtype=np.int32)[a0 : a0 + n + 1]
-            .astype(np.int64)
-        )
-        row_start = poff[:-1][order]
-        row_len = (poff[1:] - poff[:-1])[order]
-        total = int(row_len.sum())
-        out_off = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(row_len, out=out_off[1:])
-        gather = (
-            np.repeat(row_start - out_off[:-1], row_len)
-            + np.arange(total, dtype=np.int64)
-        )
-        pdata = pvals[gather].tobytes()
-        pos_bytes = _block_binary(pdata, out_off)
-    else:
-        pos_bytes = pa.BinaryArray.from_buffers(
-            pa.binary(),
-            nb,
-            [
-                None,
-                pa.py_buffer(np.zeros(nb + 1, dtype=np.int32).tobytes()),
-                pa.py_buffer(b""),
-            ],
-        )
-
-    term_vals = pa.DictionaryArray.from_arrays(
-        pa.array(tcodes[bstarts], type=pa.int32()), tdict
-    ).cast(pa.string())
-    # dictionary-coded field column too — no per-block Python (r7)
-    field_vals = pa.DictionaryArray.from_arrays(
-        pa.array(fcodes[bstarts].astype(np.int32)),
-        pa.array(fdict, type=pa.string()),
-    ).cast(pa.string())
-    return pa.table(
-        {
-            "field": field_vals,
-            "bucket": pa.array(np.full(nb, bucket, dtype=np.int32)),
-            "term": term_vals,
-            "salt": pa.array(salt[bstarts].astype(np.int32)),
-            "block_id": pa.array(block_id),
-            "n_docs": pa.array((bends - bstarts).astype(np.int32)),
-            "first_doc_id": pa.array(doc[bstarts]),
-            "last_doc_id": pa.array(doc[bends - 1]),
-            "max_tf": pa.array(max_tf),
-            "min_tf": pa.array(min_tf),
-            "min_len": pa.array(min_len),
-            "max_len": pa.array(max_len),
-            "doc_bytes": doc_bytes,
-            "tf_bytes": tf_bytes,
-            "len_bytes": len_bytes,
-            "pos_bytes": pos_bytes,
-        }
-    )
-
-
-_BLOCK_TYPES = [
-    pa.string(), pa.int32(), pa.string(), pa.int32(), pa.int32(), pa.int32(),
-    pa.int64(), pa.int64(), pa.int32(), pa.int32(), pa.int32(), pa.int32(),
-    pa.binary(), pa.binary(), pa.binary(), pa.binary(),
-]
-
-import pyarrow.compute as pc  # noqa: E402  (used by encode_group_table)
 
 
 @dataclass
@@ -648,7 +412,7 @@ class IndexBuilder:
                     F.base64(F.col(f.name)).alias("term"),
                     F.lit(1).alias("tf"),
                     F.lit(1).alias("doc_len"),
-                    F.lit(None).cast("binary").alias("pos_bytes"),
+                    F.lit(None).cast("array<int>").alias("positions"),
                 )
             )
             out = part if out is None else out.unionByName(part)
@@ -751,7 +515,7 @@ class IndexBuilder:
                 "term",
                 "tf",
                 "doc_len",
-                F.lit(None).cast("binary").alias("pos_bytes"),
+                F.lit(None).cast("array<int>").alias("positions"),
             )
             out = part if out is None else out.unionByName(part)
         return out
@@ -847,36 +611,17 @@ class IndexBuilder:
         return out
 
     def norms_from_blocks(self, fields: list[str] | None = None) -> DataFrame:
-        """Derive (field, doc_id, len) by decoding block doc/len columns —
-        a pass over the COMPRESSED index instead of a second tokenize."""
-        from bayard_spark.build.codec import delta_decode, varint_decode
-
-        blocks = read_postings(self.spark, self.paths).select(
-            "field", "doc_bytes", "len_bytes"
-        )
+        """Derive (field, doc_id, len) from the written blocks' doc/len list
+        columns — a JVM explode over the compressed index instead of a
+        second tokenize."""
+        blocks = read_postings(self.spark, self.paths)
         if fields is not None:
             blocks = blocks.filter(F.col("field").isin(fields))
-
-        def run(batches):
-            for pdf in batches:
-                fields, dids, lens = [], [], []
-                for r in pdf.itertuples(index=False):
-                    d = delta_decode(varint_decode(r.doc_bytes))
-                    ln = varint_decode(r.len_bytes)
-                    fields.append(np.full(len(d), r.field, dtype=object))
-                    dids.append(d.astype(np.int64))
-                    lens.append(ln.astype(np.int64))
-                if dids:
-                    yield pd.DataFrame(
-                        {
-                            "field": np.concatenate(fields),
-                            "doc_id": np.concatenate(dids),
-                            "len": np.concatenate(lens),
-                        }
-                    )
-
-        decoded = blocks.mapInPandas(run, "field string, doc_id long, len long")
-        return decoded.groupBy("field", "doc_id").agg(F.max("len").alias("len"))
+        return (
+            explode_blocks(blocks, "field")
+            .groupBy("field", "doc_id")
+            .agg(F.max("len").cast("long").alias("len"))
+        )
 
     def blockify_wave(self, staging: DataFrame, wave: int,
                       hot_terms: list[str]) -> dict:
@@ -902,7 +647,7 @@ class IndexBuilder:
         # frame) would otherwise ride the full posting-row shuffle — 8+
         # bytes × every posting in the corpus (guide §2.3)
         part = part.select(
-            "doc_id", "field", "term", "tf", "doc_len", "pos_bytes",
+            "doc_id", "field", "term", "tf", "doc_len", "positions",
             "bucket", "salt",
         )
 
@@ -913,20 +658,12 @@ class IndexBuilder:
             encode_group, BLOCK_SCHEMA
         )
         t0 = time.time()
-        (
-            # The groupBy exchange above hash-partitions by (bucket, salt),
-            # so every bucket's rows (per salt) already sit in exactly ONE
-            # task and the dynamic-partition writer emits one file per
-            # (field, bucket) dir per salt group — no re-shuffle of the
-            # encoded block payloads is needed to keep the commit's file
-            # count at O(dirs). (r7: the previous explicit
-            # repartition(field, bucket) re-shuffled the entire encoded
-            # index a second time for a layout the encode exchange already
-            # guarantees — measured ~30% of the blockify stage at 960k.)
-            blocks.write.mode("overwrite")
-            .partitionBy("field", "bucket")
-            .parquet(os.path.join(self.paths.postings, f"wave={wave}"))
-        )
+        # The groupBy exchange above hash-partitions by (bucket, salt), so
+        # every bucket's rows (per salt) already sit in exactly ONE task and
+        # the dynamic-partition writer emits one file per (field, bucket)
+        # dir per salt group — no re-shuffle of the encoded blocks is needed
+        # to keep the commit's file count at O(dirs).
+        write_blocks(blocks, os.path.join(self.paths.postings, f"wave={wave}"))
         return {"build_ms": (time.time() - t0) * 1000}
 
     # ---------- stage 4: norms + stats ----------

@@ -28,13 +28,17 @@ import json
 import os
 import posixpath
 import time
-from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bayard_spark.build.codec import (
+    BLOCK_SCHEMA,
+    encode_group_table,
+    explode_blocks,
+    require_list_layout,
+    write_blocks,
+)
 from bayard_spark.schema import IndexPaths
 
 COMMIT_LOG = "commits.json"
@@ -269,18 +273,13 @@ class SegmentWriter:
         return seg
 
     def _write_segment_blocks(self, rows: DataFrame, seg: str) -> None:
-        from bayard_spark.build.indexer import BLOCK_SCHEMA, encode_group_frame
-
-        rows = rows.withColumn("salt", F.lit(0))
         block_size = self.b.meta.block_size
-        blocks = rows.groupBy("bucket").applyInPandas(
-            lambda pdf: encode_group_frame(pdf, block_size), BLOCK_SCHEMA
+        blocks = rows.withColumn("salt", F.lit(0)).groupBy(
+            "bucket", "salt"
+        ).applyInArrow(
+            lambda table: encode_group_table(table, block_size), BLOCK_SCHEMA
         )
-        (
-            blocks.write.mode("overwrite")
-            .partitionBy("field", "bucket")
-            .parquet(os.path.join(self.paths.postings, f"wave={seg}"))
-        )
+        write_blocks(blocks, os.path.join(self.paths.postings, f"wave={seg}"))
 
     # ---------- §2.1 commit / rollback ----------
 
@@ -353,7 +352,7 @@ def visible_postings(spark: SparkSession, paths: IndexPaths) -> DataFrame:
         keep = is_base | F.col("wave").isin(sorted(committed))
     else:
         keep = is_base
-    return base.filter(keep).drop("wave")
+    return require_list_layout(base.filter(keep).drop("wave"))
 
 
 def visible_docs(spark: SparkSession, paths: IndexPaths) -> DataFrame:
@@ -435,56 +434,13 @@ def tombstone_side(ts: DataFrame, n_ts: int) -> DataFrame:
     return F.broadcast(ts) if n_ts <= TOMBSTONE_BROADCAST_MAX else ts
 
 
-def block_rows(spark: SparkSession, post: DataFrame) -> DataFrame:
-    """Decode posting blocks → one row per posting (doc_id, field, term,
-    salt, bucket, tf, doc_len, pos_bytes). Positions stay as their original
-    per-doc varint byte runs — never re-encoded after the analyzer pass."""
-    from bayard_spark.build.codec import (
-        decode_block,
-        split_pos_bytes,
-        varint_decode,
-    )
-
-    def to_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                d, t, _, _ = decode_block(r.doc_bytes, r.tf_bytes, None)
-                ln = varint_decode(r.len_bytes)
-                out = pd.DataFrame(
-                    {
-                        "doc_id": d.astype(np.int64),
-                        "tf": t.astype(np.int32),
-                        "doc_len": ln.astype(np.int32),
-                    }
-                )
-                out["pos_bytes"] = (
-                    split_pos_bytes(r.pos_bytes, t) if r.pos_bytes else None
-                )
-                out["field"] = r.field
-                out["term"] = r.term
-                out["salt"] = np.int32(r.salt)
-                out["bucket"] = np.int32(r.bucket)
-                outs.append(out)
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    cols = ["field", "bucket", "term", "salt", "doc_bytes", "tf_bytes",
-            "len_bytes", "pos_bytes"]
-    schema = (
-        "doc_id long, tf int, doc_len int, pos_bytes binary, field string, "
-        "term string, salt int, bucket int"
-    )
-    return post.select(*cols).mapInPandas(to_rows, schema)
-
-
 def merge_segments(spark: SparkSession, builder) -> dict:
     """Compact all visible postings into fresh base waves, applying
     tombstones physically; resets the commit log.
 
-    Fully distributed: blocks decode to posting rows (mapInPandas),
-    tombstones drop via an anti-join (JVM-side — the driver never
-    materializes doomed ids). The broadcast hint on the tombstone side
+    Fully distributed: blocks explode to posting rows (one JVM
+    projection), tombstones drop via an anti-join (JVM-side — the driver
+    never materializes doomed ids). The broadcast hint on the tombstone side
     is SIZE-GATED: at web scale a purge can doom billions of ids, and
     forcing a broadcast there would fail exactly when deletes are
     biggest; past the gate the anti-join shuffles. Then the same
@@ -496,9 +452,9 @@ def merge_segments(spark: SparkSession, builder) -> dict:
     post = visible_postings(spark, paths)
     ts = load_tombstones(spark, paths)
 
-    from bayard_spark.build.indexer import BLOCK_SCHEMA, encode_group_table
-
-    rows = block_rows(spark, post)
+    rows = explode_blocks(
+        post, "field", "term", "salt", "bucket", positions=True
+    ).withColumnRenamed("len", "doc_len")
     if ts is not None:
         # a re-put url lives under a new doc_id; its old id is doomed.
         # merge is a rare offline job — one count to pick the join
@@ -511,15 +467,13 @@ def merge_segments(spark: SparkSession, builder) -> dict:
     io = log.io
     merged_dir = io.path("postings_merged")
     io.delete_dir(merged_dir)
-    (
+    write_blocks(
         rows.groupBy("bucket", "salt")
         .applyInArrow(
             lambda table: encode_group_table(table, block_size), BLOCK_SCHEMA
         )
-        .repartition(F.col("field"), F.col("bucket"))
-        .write.mode("overwrite")
-        .partitionBy("field", "bucket")
-        .parquet(os.path.join(merged_dir, "wave=0"))
+        .repartition(F.col("field"), F.col("bucket")),
+        os.path.join(merged_dir, "wave=0"),
     )
     # swap postings dir; rewrite docs without tombstones; reset log
     new_docs_dir = io.path("docs_merged")

@@ -40,5 +40,17 @@ def quantize(lens: np.ndarray) -> np.ndarray:
     return TABLE[idx]
 
 
+def quantize_col(lens):
+    """JVM twin of `quantize` for a Spark length column: exact below 41,
+    else the largest table value ≤ the length."""
+    from pyspark.sql import functions as F
+
+    ln = lens.cast("long")
+    table = F.array(*[F.lit(int(v)) for v in TABLE])
+    return F.when(ln <= 40, ln).otherwise(
+        F.element_at(table, F.size(F.filter(table, lambda t: t <= ln)))
+    )
+
+
 def quantize_one(n: int) -> int:
     return int(quantize(np.asarray([n]))[0])

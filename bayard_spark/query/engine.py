@@ -1,19 +1,27 @@
 """Spark search engine: JSON query DSL → DataFrame plans over the index.
 
-Plan shape per query (SURVEY §2.4-2.5 mapping):
+Plan shape per query (SURVEY §2.4-2.5 mapping). Decode, scoring and
+phrase matching are scans, JVM generators, joins and JVM expressions, so
+no request kind runs Python on executors. The one exception is the
+distributed dictionary expansion for vocabularies too large to preload
+(`PRELOAD_EXPAND_MAX`), which verifies Damerau/prefix fuzzy and Python-regex
+matches in a pandas UDF.
 
 - leaf terms resolve to parquet scans of postings blocks with predicates on
   (field, bucket, term): field/bucket are PARTITION columns (pruned before
-  I/O), term hits row-group min/max stats. Block payloads decode in one
-  Arrow-native mapInArrow pass (numpy codec, zero-copy position lists);
-  scoring is pure JVM expressions with IDF as a driver-computed literal
-  (exact float parity with the Python oracle).
+  I/O), term hits row-group min/max stats. Blocks store their payload as
+  list columns (doc_offsets, tfs, lens, positions — build/codec.py), and
+  `_decode` turns them into posting rows with one JVM
+  `inline(arrays_zip(...))` projection; scoring is pure JVM expressions
+  with IDF as a driver-computed literal (exact float parity with the
+  Python oracle).
 - boolean: must = inner joins ordered rarest-df-first (classic IR
   intersection ordering — SURVEY §4), should = full-outer + left-to-right
   score sum, must_not = left_anti (boolean.rs:272-290 semantics).
 - phrase: per-term position arrays joined on doc_id, adjacency-within-slop
-  verified in a vectorized pandas UDF; scored with tf = match count and
-  idf = Σ constituent idfs (phrase.rs:13-33).
+  counted by JVM higher-order functions (`with_phrase_tf`: a backward
+  sweep of hash intersections with shifted positions); scored with tf =
+  match count and idf = Σ constituent idfs (phrase.rs:13-33).
 - fuzzy/regex: term-dictionary expansion over block METADATA only (parquet
   reads just the `term` column), then a should-sum over matched terms
   (fuzzy_term.rs:5-39, regex.rs:12-25).
@@ -23,34 +31,98 @@ Plan shape per query (SURVEY §2.4-2.5 mapping):
 - block-max pruning: for top-k term queries, a block survives only if its
   metadata upper bound can beat the k-th guaranteed lower bound — computed
   entirely from (max_tf, min_len / min_tf, max_len) columns, JVM-side, before
-  any Python decode. This is the block-max WAND idea restated for a
+  any payload is exploded. This is the block-max WAND idea restated for a
   metadata-first layout (SURVEY §4 "block-max pruning").
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field as dc_field
 from functools import reduce
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bayard_spark.build.codec import (
-    decode_block,
-    delta_decode_segments,
-    varint_decode,
-    varint_decode_many,
-)
+from bayard_spark.build.codec import explode_blocks
 from bayard_spark.query.parser import parse_query_string
 from bayard_spark.schema import IndexMeta, IndexPaths
 
-DECODED_SCHEMA = (
-    "term string, doc_id long, tf double, len double, positions array<int>"
-)
+
+class _LRU:
+    """Lock-guarded LRU map holding at most `cap` entries."""
+
+    def __init__(self, cap: int):
+        self.cap = cap
+        self._d: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def get(self, key):
+        with self._lock:
+            value = self._d.get(key)
+            if value is not None:
+                self._d.move_to_end(key)
+            return value
+
+    def __setitem__(self, key, value) -> None:
+        with self._lock:
+            self._d[key] = value
+            self._d.move_to_end(key)
+            while len(self._d) > self.cap:
+                self._d.popitem(last=False)
+
+    def __len__(self) -> int:
+        return len(self._d)
+
+    def clear(self) -> None:
+        with self._lock:
+            self._d.clear()
+
+
+def with_phrase_tf(frame: DataFrame, pos_cols: list[str], slop: int) -> DataFrame:
+    """Add `tf` = number of phrase matches per row, in JVM expressions.
+
+    Semantics (= oracle._phrase_matches): tf counts the start positions p0
+    in pos_cols[0] from which a chain p0 < p1 <= p0+slop+1 < ... runs
+    through every list. Counting starts is a BACKWARD reachability sweep:
+    S holds the positions of term i+1 that can complete the tail, and a
+    position p of term i survives iff S has an element in (p, p+slop+1],
+    i.e. iff p is in the union of S shifted down by 1..slop+1. Every stage
+    is one hash intersection with that union, O(|P| + (slop+1)·|S|) per
+    row; a per-element scan of S would be O(|P|·|S|), which long pages
+    holding two head terms thousands of times cannot afford.
+
+    The intersection is a set, but the oracle counts duplicate start
+    positions. Tokenizers that assign positions never repeat one; only the
+    position-0 tokenizers (raw, ngram, facet) do, and there every list is
+    all zeros, so nothing matches. Rows whose start list has duplicates
+    still count them exactly, by a membership scan against the (then
+    empty or tiny) match set.
+    """
+    shifts = F.array(*[F.lit(d) for d in range(1, slop + 2)]).cast("array<int>")
+
+    def reach(p: str, S: Column) -> Column:
+        # S is the argument of the outer transform, not read in a lambda:
+        # Catalyst evaluates it once per row even where it inlines S.
+        return F.array_intersect(
+            F.col(p),
+            F.flatten(F.transform(S, lambda q: F.transform(shifts, lambda d: q - d))),
+        )
+
+    cols = frame.columns
+    S = F.col(pos_cols[-1])
+    for p in pos_cols[-2:0:-1]:
+        S = reach(p, S)
+    # its own column: the duplicate-start count below reads it in a lambda
+    frame = frame.withColumn("_starts", reach(pos_cols[0], S))
+    P0, starts = F.col(pos_cols[0]), F.col("_starts")
+    tf = F.when(
+        F.size(F.array_distinct(P0)) == F.size(P0), F.size(starts)
+    ).otherwise(F.size(F.filter(P0, lambda x: F.array_contains(starts, x))))
+    return frame.select(*cols, tf.cast("double").alias("tf"))
 
 
 @dataclass
@@ -80,21 +152,17 @@ class SearchEngine:
     # cap); position rows carry int arrays, so their gate sits lower.
     BROADCAST_DOCS_MAX = 500_000
     BROADCAST_POSITIONS_MAX = 100_000
-    # Phrase candidate-filtered decode gate: collect the rare term's doc
-    # ids (≤ PHRASE_SEMI_MAX, bounded driver memory) and push them into a
-    # wide constituent's decoder only when whole BLOCKS can actually be
-    # skipped — candidates are hash-scattered over doc ids, so a block of
-    # `block_size` docs is empty of candidates only when
-    # rare_df × block_size ≲ wide_df (expected candidates/block < 1);
-    # below that ratio the extra job buys nothing (measured: ratio 8 was
-    # pure overhead — every block still held a candidate).
-    PHRASE_SEMI_MAX = 100_000
     # Above this many preloaded dictionary entries, fuzzy/regex expansion
     # routes to the DISTRIBUTED path even when the dict is driver-resident:
     # a Python loop over millions of cached terms costs seconds of driver
     # CPU per query, while the Spark job scans the same metadata in
     # parallel. (VERDICT r2 "What's wrong" #2.)
     PRELOAD_EXPAND_MAX = 50_000
+    # Entry caps of the per-engine plan and expansion caches (LRU): a
+    # long-lived server answering ever-new fuzzy/regex patterns must not
+    # grow them without bound.
+    LEAF_CACHE_MAX = 256
+    EXPANSION_CACHE_MAX = 1024
 
     def __init__(self, spark: SparkSession, root: str,
                  preload_dictionary: bool = True,
@@ -172,7 +240,7 @@ class SearchEngine:
         # open over an immutable index snapshot. Compositions that contain
         # shuffles (boolean joins, should-aggs) are rebuilt per call so no
         # shuffle-stage output is ever silently reused as a cached result.
-        self._leaf_cache: dict[tuple, DataFrame] = {}
+        self._leaf_cache = _LRU(self.LEAF_CACHE_MAX)
         # Expansion-neighborhood cache for fuzzy/regex: the matched
         # {term: df} map is pure index metadata (static per snapshot,
         # like _df_cache), but computing it costs a dictionary-scan
@@ -180,7 +248,7 @@ class SearchEngine:
         # A server answering repeated patterns over one snapshot must
         # not re-run that job per request (r7; same rationale as the
         # leaf plan cache above).
-        self._expansion_cache: dict[tuple, dict[str, int]] = {}
+        self._expansion_cache = _LRU(self.EXPANSION_CACHE_MAX)
         self._dict_complete = False
         self.k1 = self.meta.bm25_k1
         self.b = self.meta.bm25_b
@@ -279,7 +347,7 @@ class SearchEngine:
     # without this the whole posting list decodes on ONE task no matter
     # how many executors the cluster has (measured: 960k postings = 7508
     # blocks on one core, ~2 s; the repartition shuffles only the block
-    # payload bytes — ~3.5 MB per million postings — and spreads decode
+    # payload lists — a few MB per million postings — and spreads decode
     # across the cluster, which is the only plan that works when a hot
     # term's list is billions of postings at 100 TB).
     DECODE_PARALLEL_MIN_DOCS = 131_072
@@ -291,18 +359,12 @@ class SearchEngine:
         self,
         blocks: DataFrame,
         want_positions: bool,
-        candidate_ids=None,
         n_docs_hint: int | None = None,
     ) -> DataFrame:
-        """Decode block payloads → (term, doc_id, tf, len[, positions]).
-
-        candidate_ids (sorted int64 np.ndarray, broadcast by closure):
-        semi-join pushed INTO the decoder — doc ids decode first (cheap),
-        and a block with no candidate skips its positions varint decode and
-        per-row list construction entirely; surviving blocks emit only
-        candidate rows. This is how a phrase with one rare and one huge
-        term avoids materializing the huge term's positions at 100 TB
-        (tantivy's doc-at-a-time intersection restated block-at-a-time).
+        """Block rows → (term, doc_id, tf, len[, positions]) as one JVM
+        explode over the list columns (build/codec.py explode_blocks); tf
+        and len stay ints, which the double-valued score expressions widen
+        exactly.
 
         n_docs_hint (an upper bound on the decoded posting count, from the
         dictionary's df — no extra job): above DECODE_PARALLEL_MIN_DOCS the
@@ -310,189 +372,6 @@ class SearchEngine:
         across the cluster instead of running on the one task that scans
         the term's bucket file.
         """
-
-        lossy = self.meta.lossy_fieldnorms
-        cand_bc = (
-            self.spark.sparkContext.broadcast(
-                np.asarray(candidate_ids, dtype=np.int64)
-            )
-            if candidate_ids is not None
-            else None
-        )
-
-        def run(batches):
-            # Arrow-native: per-BLOCK numpy decode (accepted granularity),
-            # but the output is assembled as ONE RecordBatch per input
-            # batch with the positions as a zero-copy ListArray sliced by
-            # the codec's own offsets — no per-row Python list building
-            # (the old pandas path spent most of its time in .tolist()).
-            import pyarrow as pa
-
-            from bayard_spark.fieldnorm import quantize
-
-            cand = cand_bc.value if cand_bc is not None else None
-            if cand is not None and len(cand) == 0:
-                # provably-empty intersection (e.g. every doc holding the
-                # rare term was tombstoned): emit nothing rather than index
-                # into an empty candidate array below (ADVICE r4)
-                return
-
-            def bin_np(arr):
-                # zero-copy (data, byte-offsets) view of a BinaryArray —
-                # None when nulls are present (never written by our
-                # indexer, but fall back to the per-block path if so)
-                if arr.null_count:
-                    return None
-                bufs = arr.buffers()
-                offs = np.frombuffer(bufs[1], dtype=np.int32)[
-                    arr.offset : arr.offset + len(arr) + 1
-                ].astype(np.int64)
-                if bufs[2] is None:
-                    return np.empty(0, dtype=np.uint8), offs - offs[0]
-                data = np.frombuffer(bufs[2], dtype=np.uint8)
-                return data[offs[0] : offs[-1]], offs - offs[0]
-
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                if cand is None and not want_positions:
-                    # BATCHED fast path (the term/multi-term scoring hot
-                    # path): decode the whole Arrow batch's payloads in
-                    # three vectorized varint passes over the binary
-                    # columns' contiguous buffers — no per-block Python
-                    # calls, no per-cell .as_py() copies (measured ~7x on
-                    # a 960k-posting hot term vs the per-block loop).
-                    views = [bin_np(rb.column(j)) for j in (1, 2, 3)]
-                    if all(v is not None for v in views):
-                        (dd, do), (td, to), (ld, lo) = views
-                        deltas, voffs = varint_decode_many(dd, do)
-                        doc_all = delta_decode_segments(deltas, voffs)
-                        tfs, _ = varint_decode_many(td, to)
-                        lens, _ = varint_decode_many(ld, lo)
-                        if lossy:
-                            lens = quantize(lens)
-                        counts = np.diff(voffs)
-                        n = int(voffs[-1])
-                        codes = np.repeat(
-                            np.arange(rb.num_rows, dtype=np.int32), counts
-                        )
-                        term_arr = pa.DictionaryArray.from_arrays(
-                            pa.array(codes, type=pa.int32()), rb.column(0)
-                        ).cast(pa.string())
-                        yield pa.RecordBatch.from_arrays(
-                            [
-                                term_arr,
-                                pa.array(
-                                    doc_all.astype(np.int64),
-                                    type=pa.int64(),
-                                ),
-                                pa.array(
-                                    tfs.astype(np.float64),
-                                    type=pa.float64(),
-                                ),
-                                pa.array(
-                                    lens.astype(np.float64),
-                                    type=pa.float64(),
-                                ),
-                                pa.nulls(n, type=pa.list_(pa.int32())),
-                            ],
-                            names=[
-                                "term", "doc_id", "tf", "len", "positions"
-                            ],
-                        )
-                        continue
-                terms = rb.column(0).to_pylist()
-                doc_col = rb.column(1)
-                tf_col = rb.column(2)
-                len_col = rb.column(3)
-                pos_col = rb.column(4) if want_positions else None
-                doc_parts, tf_parts, len_parts, term_rep = [], [], [], []
-                pos_parts, pos_counts = [], []
-                for i in range(rb.num_rows):
-                    db = doc_col[i].as_py()
-                    tb = tf_col[i].as_py()
-                    if cand is not None:
-                        doc_ids, tfs, _, _ = decode_block(db, tb, None)
-                        idx = np.searchsorted(cand, doc_ids)
-                        idx[idx == len(cand)] = 0
-                        mask = cand[idx] == doc_ids
-                        if not mask.any():
-                            continue  # no candidate: skip payload decode
-                    pb = pos_col[i].as_py() if want_positions else None
-                    doc_ids, tfs, positions, offs = decode_block(db, tb, pb)
-                    lens = varint_decode(len_col[i].as_py())
-                    if lossy:
-                        lens = quantize(lens)
-                    if cand is not None:
-                        keep = np.nonzero(mask)[0]
-                        doc_ids, tfs, lens = (
-                            doc_ids[keep], tfs[keep], lens[keep]
-                        )
-                    else:
-                        keep = None
-                    doc_parts.append(doc_ids.astype(np.int64))
-                    tf_parts.append(tfs.astype(np.float64))
-                    len_parts.append(lens.astype(np.float64))
-                    term_rep.append((terms[i], len(doc_ids)))
-                    if want_positions and positions is not None:
-                        pos32 = positions.astype(np.int32)
-                        if keep is None:
-                            pos_parts.append(pos32)
-                            pos_counts.append(np.diff(offs))
-                        else:
-                            counts = np.diff(offs)[keep]
-                            take = np.concatenate(
-                                [
-                                    np.arange(offs[k], offs[k + 1])
-                                    for k in keep
-                                ]
-                            ) if len(keep) else np.empty(0, dtype=np.int64)
-                            pos_parts.append(pos32[take])
-                            pos_counts.append(counts)
-                if not doc_parts:
-                    continue
-                doc_all = np.concatenate(doc_parts)
-                n = len(doc_all)
-                # dictionary-encode the repeated term column: codes via
-                # np.repeat over per-block counts, values = one string per
-                # block; the cast to plain string is a C++ take — no
-                # per-posting Python list construction (VERDICT r4 nit;
-                # measured 10.9x on the isolated construction: 2.26 ms →
-                # 0.21 ms per 200-block/25.6k-posting batch)
-                rep_counts = np.fromiter(
-                    (c for _, c in term_rep), dtype=np.int64, count=len(term_rep)
-                )
-                codes = np.repeat(
-                    np.arange(len(term_rep), dtype=np.int32), rep_counts
-                )
-                term_arr = pa.DictionaryArray.from_arrays(
-                    pa.array(codes, type=pa.int32()),
-                    pa.array([t for t, _ in term_rep], type=pa.string()),
-                ).cast(pa.string())
-                if want_positions and pos_parts:
-                    counts = np.concatenate(pos_counts).astype(np.int64)
-                    offsets = np.concatenate(([0], np.cumsum(counts)))
-                    pos_arr = pa.ListArray.from_arrays(
-                        pa.array(offsets, type=pa.int32()),
-                        pa.array(np.concatenate(pos_parts), type=pa.int32()),
-                    )
-                else:
-                    pos_arr = pa.nulls(n, type=pa.list_(pa.int32()))
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        term_arr,
-                        pa.array(doc_all, type=pa.int64()),
-                        pa.array(np.concatenate(tf_parts), type=pa.float64()),
-                        pa.array(np.concatenate(len_parts), type=pa.float64()),
-                        pos_arr,
-                    ],
-                    names=["term", "doc_id", "tf", "len", "positions"],
-                )
-
-        cols = ["term", "doc_bytes", "tf_bytes", "len_bytes"] + (
-            ["pos_bytes"] if want_positions else []
-        )
-        payload = blocks.select(*cols)
         if (
             n_docs_hint is not None
             and n_docs_hint >= self.DECODE_PARALLEL_MIN_DOCS
@@ -503,8 +382,15 @@ class SearchEngine:
                     max(2, n_docs_hint // self.DECODE_DOCS_PER_TASK),
                 )
             )
-            payload = payload.repartition(target)
-        decoded = payload.mapInArrow(run, DECODED_SCHEMA)
+            blocks = blocks.select(
+                "term", "first_doc_id", "n_docs", "doc_offsets", "tfs",
+                "lens", *(["positions"] if want_positions else []),
+            ).repartition(target)
+        decoded = explode_blocks(blocks, "term", positions=want_positions)
+        if self.meta.lossy_fieldnorms:
+            from bayard_spark.fieldnorm import quantize_col
+
+            decoded = decoded.withColumn("len", quantize_col(F.col("len")))
         if self.tombstones is not None:
             from bayard_spark.build.segments import tombstone_side
 
@@ -564,13 +450,9 @@ class SearchEngine:
             blocks = self._leaf_blocks(fld, term)
             if pruned:
                 blocks = self._prune_blocks(blocks, idf, avg)
-            cached = (
-                self._decode(
-                    blocks, want_positions=False, n_docs_hint=df_count
-                )
-                .withColumn("score", self._score_expr(idf, avg))
-                .select("doc_id", "score")
-            )
+            cached = self._decode(
+                blocks, want_positions=False, n_docs_hint=df_count
+            ).select("doc_id", self._score_expr(idf, avg).alias("score"))
             self._leaf_cache[key] = cached
         return cached
 
@@ -597,7 +479,7 @@ class SearchEngine:
         # synchronous driver collect happens per query (the old tau collect
         # added a sequential ~0.15 s job to every pruned term query at
         # bench scale). The τ branch reads only the metadata columns
-        # (column pruning keeps the payload bytes out of that scan).
+        # (column pruning keeps the payload lists out of that scan).
         meta_cols = blocks.withColumn("_ub", bound("max_tf", "min_len"))
         tau_df = (
             blocks.withColumn("_lb", bound("min_tf", "max_len"))
@@ -634,63 +516,17 @@ class SearchEngine:
         name_of = {t: f"p{phrase_terms.index(t)}" for t in uniq}
         # rarest-first intersection ordering
         order_terms = sorted(uniq, key=lambda t: df_map[t])
-        # Candidate-filtered decode: when one constituent is rare and
-        # another is huge, collect the rare term's bounded doc-id set once
-        # and push it INTO the wide terms' decoders — blocks with no
-        # candidate skip their positions varint decode and row
-        # materialization, so a phrase like ["the", <rare>] never
-        # manifests the head term's positions (the 100-TB plan; at equal
-        # sizes the extra job isn't worth it and the gate stays closed).
-        rare_df = df_map[order_terms[0]]
-        wide_df = df_map[order_terms[-1]]
-        semi_ratio = getattr(
-            self, "PHRASE_SEMI_RATIO", self.meta.block_size
-        )
-        candidates = None
-        if (
-            rare_df <= self.PHRASE_SEMI_MAX
-            and wide_df >= semi_ratio * rare_df
-        ):
-            rows = (
-                self._decode(
-                    self._leaf_blocks(fld, order_terms[0]),
-                    want_positions=False,
-                    n_docs_hint=rare_df,
-                )
-                .select("doc_id")
-                .collect()
-            )
-            candidates = np.sort(
-                np.array([r["doc_id"] for r in rows], dtype=np.int64)
-            )
-            if len(candidates) == 0:
-                # the rare term's live posting set is empty (every holder
-                # tombstoned) — the intersection is provably empty; don't
-                # hand an empty candidate array to the decoders (ADVICE r4)
-                return self._empty_scores()
         joined = None
         for j, t in enumerate(order_terms):
-            semi = (
-                candidates is not None
-                and df_map[t] >= semi_ratio * rare_df
-            )
-            if semi:
+            key = ("pos", fld, t)
+            base_t = self._leaf_cache.get(key)
+            if base_t is None:
                 base_t = self._decode(
                     self._leaf_blocks(fld, t),
                     want_positions=True,
-                    candidate_ids=candidates,
                     n_docs_hint=df_map[t],
-                ).select("doc_id", "positions", "len")
-            else:
-                key = ("pos", fld, t)
-                base_t = self._leaf_cache.get(key)
-                if base_t is None:
-                    base_t = self._decode(
-                        self._leaf_blocks(fld, t),
-                        want_positions=True,
-                        n_docs_hint=df_map[t],
-                    ).select("doc_id", "positions", "len")
-                    self._leaf_cache[key] = base_t
+                )
+                self._leaf_cache[key] = base_t
             f_t = base_t.select(
                 "doc_id",
                 F.col("positions").alias(name_of[t]),
@@ -707,72 +543,16 @@ class SearchEngine:
                 joined = joined.join(f_t, "doc_id")
         # duplicate terms in the phrase reuse the same positions column
         pos_cols = [name_of[t] for t in phrase_terms]
-
-        slop_val = slop
-
-        def count_matches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            """Vectorized phrase adjacency over the whole Arrow batch.
-
-            Semantics (= oracle._phrase_matches): tf = number of start
-            positions p0 in term0's list from which a chain p0 < p1 <= p0+
-            slop+1 < ... exists through every term list. Counting starts is a
-            BACKWARD reachability sweep: S holds the positions of term i+1
-            that can complete the tail; a position p of term i survives iff
-            S has an element in (p, p+slop+1]. Per-doc segmentation is free:
-            positions are embedded at doc_row*2^33 + pos (positions are
-            int32, slop small), so one globally sorted axis serves every doc
-            and np.searchsorted handles all docs of the batch at once.
-            Python work is O(#terms) per batch, not O(rows × positions).
-            """
-            import pyarrow as _pa
-
-            shift = np.int64(1) << np.int64(33)
-            step = np.int64(slop_val + 1)
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    yield pd.DataFrame(
-                        {"doc_id": pdf["doc_id"], "tf": [], "len": pdf["len"]}
-                    )
-                    continue
-                flat: list[np.ndarray] = []
-                docix: list[np.ndarray] = []
-                for c in pos_cols:
-                    la = _pa.array(pdf[c], type=_pa.list_(_pa.int64()))
-                    offs = la.offsets.to_numpy(zero_copy_only=False).astype(
-                        np.int64
-                    )
-                    vals = la.flatten().to_numpy(zero_copy_only=False).astype(
-                        np.int64
-                    )
-                    di = np.repeat(np.arange(n, dtype=np.int64), np.diff(offs))
-                    flat.append(di * shift + vals)
-                    docix.append(di)
-                S = flat[-1]
-                counts = np.zeros(n, dtype=np.float64)
-                for i in range(len(pos_cols) - 2, -1, -1):
-                    p = flat[i]
-                    lo = np.searchsorted(S, p, side="right")
-                    hi = np.searchsorted(S, p + step, side="right")
-                    keep = hi > lo
-                    if i == 0:
-                        np.add.at(counts, docix[0][keep], 1.0)
-                    else:
-                        S = p[keep]
-                yield pd.DataFrame(
-                    {"doc_id": pdf["doc_id"], "tf": counts, "len": pdf["len"]}
-                )
-
-        matched = joined.mapInPandas(
-            count_matches, "doc_id long, tf double, len double"
-        ).filter(F.col("tf") > 0)
-        return matched.withColumn(
-            "score", self._score_expr(sum_idf, avg)
-        ).select("doc_id", "score")
+        matched = with_phrase_tf(joined, pos_cols, slop).filter(
+            F.col("tf") > 0
+        )
+        return matched.select(
+            "doc_id", self._score_expr(sum_idf, avg).alias("score")
+        )
 
     def _term_dictionary(self, fld: str) -> DataFrame:
         """Distinct (term, df) for a field — a metadata-only scan (parquet
-        reads just the term/n_docs columns; the binary payloads are pruned)."""
+        reads just the term/n_docs columns; the payload lists are pruned)."""
         return (
             self.postings.filter(F.col("field") == fld)
             .groupBy("term")
@@ -1523,23 +1303,14 @@ class SearchEngine:
         if len(ids) <= self.ISIN_LOOKUP_MAX:
             rows = proj.filter(F.col("doc_id").isin(ids)).collect()
         else:
-            # ship the id list as ONE Arrow batch: a list-of-tuples
-            # createDataFrame pays per-row Python->JVM pickling, which
-            # profiling showed dominates this fetch (~0.45 s of a 0.56 s
-            # fetch for 3k ids at sf0.1); the Arrow path is ~3x faster
-            arrow_key = "spark.sql.execution.arrow.pyspark.enabled"
-            prev = self.spark.conf.get(arrow_key, "false")
-            if prev != "true":
-                self.spark.conf.set(arrow_key, "true")
-            try:
-                id_df = self.spark.createDataFrame(
-                    pd.DataFrame(
-                        {"doc_id": np.asarray(ids, dtype=np.int64)}
-                    ),
-                    schema="doc_id long",
-                )
-                rows = proj.join(F.broadcast(id_df), "doc_id").collect()
-            finally:
-                if prev != "true":
-                    self.spark.conf.set(arrow_key, prev)
+            # ship the id list as ONE Arrow table: a list-of-tuples
+            # createDataFrame pays per-row Python->JVM pickling, and the
+            # Arrow path needs no session-conf change (a request must not
+            # flip session-global settings under concurrent clients)
+            import pyarrow as pa
+
+            id_df = self.spark.createDataFrame(
+                pa.table({"doc_id": pa.array(ids, type=pa.int64())})
+            )
+            rows = proj.join(F.broadcast(id_df), "doc_id").collect()
         return {r["doc_id"]: r.asDict() for r in rows}

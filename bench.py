@@ -670,22 +670,36 @@ def main() -> None:
     print(json.dumps(out))
 
 
-def _prev_round_queries() -> tuple[str, dict] | None:
-    """Newest BENCH_r*.json in the repo root → (name, per-query seconds)."""
+def _prev_round_queries(directory: str | None = None) -> tuple[str, dict] | None:
+    """Newest usable BENCH_r*.json in `directory` (default: the repo root)
+    → (name, per-query seconds).
+
+    Candidates sort by round number, then name; a file whose `parsed` (or
+    top-level) object holds no non-empty `queries` dict — a timed-out or
+    crashed round records `parsed: null` — is skipped for the next newest.
+    """
     import glob
     import re
 
-    here = os.path.dirname(os.path.abspath(__file__))
+    here = directory or os.path.dirname(os.path.abspath(__file__))
     cands = sorted(
         glob.glob(os.path.join(here, "BENCH_r*.json")),
-        key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
+        key=lambda p: (
+            int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
+            os.path.basename(p),
+        ),
     )
-    if not cands:
-        return None
-    with open(cands[-1]) as f:
-        data = json.load(f)
-    parsed = data.get("parsed", data)
-    return os.path.basename(cands[-1]), parsed.get("queries", {})
+    for path in reversed(cands):
+        try:
+            with open(path) as f:
+                data = json.load(f)
+        except (OSError, ValueError):
+            continue
+        parsed = data.get("parsed", data) if isinstance(data, dict) else None
+        queries = parsed.get("queries") if isinstance(parsed, dict) else None
+        if isinstance(queries, dict) and queries:
+            return os.path.basename(path), queries
+    return None
 
 
 def skew_section() -> str:
@@ -733,6 +747,7 @@ def write_baseline_md(
     delta_rows = ""
     if prev:
         prev_name, prev_q = prev
+        print(f"bench: per-query deltas vs {prev_name}", file=sys.stderr)
         for name, cur in qstats["per_query"].items():
             old = prev_q.get(name)
             if old:

@@ -1,201 +1,190 @@
-"""Posting block codec: exact round-trips + property-based checks."""
+"""Posting-block layout: the list-column encoder round-trips exactly, both
+in Arrow and through a Parquet write + JVM explode."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from bayard_spark.build.codec import (
-    decode_block,
-    delta_decode,
-    delta_encode,
-    encode_block,
-    split_pos_bytes,
-    varint_decode,
-    varint_encode,
-    varint_lengths,
+    BLOCK_SCHEMA,
+    IndexFormatError,
+    encode_group_table,
+    explode_blocks,
+    write_blocks,
 )
 
-
-class TestVarint:
-    def test_edge_values(self):
-        vals = np.array(
-            [0, 1, 127, 128, 16383, 16384, 2**32, 2**62, 2**63 - 1],
-            dtype=np.uint64,
-        )
-        assert np.array_equal(varint_decode(varint_encode(vals)), vals)
-
-    def test_empty(self):
-        assert varint_encode(np.empty(0, dtype=np.uint64)) == b""
-        assert varint_decode(b"").size == 0
-
-    def test_lengths_match_encoding(self):
-        vals = np.array([0, 127, 128, 16384, 2**62], dtype=np.uint64)
-        lens = varint_lengths(vals)
-        assert lens.tolist() == [1, 1, 2, 3, 9]
-        assert int(lens.sum()) == len(varint_encode(vals))
-
-    @settings(max_examples=50, deadline=None)
-    @given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=500))
-    def test_roundtrip_property(self, xs):
-        vals = np.array(xs, dtype=np.uint64)
-        assert np.array_equal(varint_decode(varint_encode(vals)), vals)
-
-    def test_single_byte_wire_format(self):
-        # LEB128: 300 = 0b100101100 → 0xAC 0x02
-        assert varint_encode(np.array([300], dtype=np.uint64)) == b"\xac\x02"
+POS_FIELDS = ("text",)
 
 
-class TestDelta:
-    @settings(max_examples=50, deadline=None)
-    @given(
-        st.lists(
-            st.integers(min_value=0, max_value=2**40), min_size=1, max_size=300
-        )
+def _random_postings(rng, n_terms=6, block_size=128):
+    """Posting rows of one (bucket) group: a positional field, a
+    position-less field, a salted term, and lists that end exactly on,
+    just past and well inside a block boundary."""
+    rows = []
+    sizes = [1, block_size, block_size + 1, 3 * block_size - 5, 40, 7]
+    for fld in ("text", "url"):
+        for t in range(n_terms):
+            for salt in ([0, 1] if t == 0 else [0]):
+                n = sizes[t % len(sizes)]
+                docs = np.sort(rng.choice(1 << 40, size=n, replace=False))
+                for d in docs:
+                    tf = int(rng.integers(1, 5))
+                    pos = (
+                        np.sort(rng.choice(500, size=tf, replace=False))
+                        .astype(int).tolist()
+                        if fld in POS_FIELDS else None
+                    )
+                    rows.append(
+                        (int(d), fld, f"term{t}", tf,
+                         int(rng.integers(1, 300)), pos, 3, salt)
+                    )
+    rng.shuffle(rows)
+    return rows
+
+
+def _table(rows):
+    cols = list(zip(*rows))
+    return pa.table(
+        {
+            "doc_id": pa.array(cols[0], pa.int64()),
+            "field": pa.array(cols[1], pa.string()),
+            "term": pa.array(cols[2], pa.string()),
+            "tf": pa.array(cols[3], pa.int32()),
+            "doc_len": pa.array(cols[4], pa.int32()),
+            "positions": pa.array(cols[5], pa.list_(pa.int32())),
+            "bucket": pa.array(cols[6], pa.int32()),
+            "salt": pa.array(cols[7], pa.int32()),
+        }
     )
-    def test_roundtrip_sorted(self, xs):
-        vals = np.array(sorted(xs), dtype=np.uint64)
-        assert np.array_equal(delta_decode(delta_encode(vals)), vals)
 
 
-class TestBlock:
-    def test_roundtrip_with_positions(self):
-        rng = np.random.RandomState(3)
-        n = 128
-        # sorted unique ids spread over ~10^12 without materializing the range
-        doc_ids = np.cumsum(
-            rng.randint(1, 2**33, size=n).astype(np.uint64)
-        )
-        tfs = rng.randint(1, 8, n).astype(np.uint64)
-        offs = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(tfs, out=offs[1:])
-        positions = np.concatenate(
-            [np.sort(rng.choice(5000, int(t), replace=False)) for t in tfs]
-        ).astype(np.uint64)
-        db, tb, pb = encode_block(doc_ids, tfs, positions, offs)
-        d2, t2, p2, o2 = decode_block(db, tb, pb)
-        assert np.array_equal(d2, doc_ids)
-        assert np.array_equal(t2, tfs)
-        assert np.array_equal(p2, positions)
-        assert np.array_equal(o2, offs)
-
-    def test_split_pos_bytes_framing(self):
-        # per-doc byte runs of the concatenated stream decode independently
-        tfs = np.array([2, 1, 3], dtype=np.uint64)
-        doc_ids = np.array([10, 20, 30], dtype=np.uint64)
-        positions = np.array([5, 9, 1000, 7, 8, 2000], dtype=np.uint64)
-        offs = np.array([0, 2, 3, 6], dtype=np.int64)
-        _, _, pb = encode_block(doc_ids, tfs, positions, offs)
-        runs = split_pos_bytes(pb, tfs)
-        assert b"".join(runs) == pb
-        assert np.array_equal(
-            np.cumsum(varint_decode(runs[0]), dtype=np.uint64),
-            np.array([5, 9], dtype=np.uint64),
-        )
-        assert np.array_equal(
-            np.cumsum(varint_decode(runs[2]), dtype=np.uint64),
-            np.array([7, 8, 2000], dtype=np.uint64),
-        )
-
-    def test_partial_block_and_single_doc(self):
-        d = np.array([42], dtype=np.uint64)
-        t = np.array([3], dtype=np.uint64)
-        db, tb, pb = encode_block(d, t)
-        d2, t2, p2, _ = decode_block(db, tb, pb)
-        assert d2.tolist() == [42] and t2.tolist() == [3] and p2 is None
-
-    def test_compression_ratio_dense_ids(self):
-        # dense sequential ids → 1 byte/doc-delta
-        d = np.arange(1000, 1128, dtype=np.uint64)
-        t = np.ones(128, dtype=np.uint64)
-        db, tb, _ = encode_block(d, t)
-        assert len(db) <= 130  # first abs value + 127 one-byte deltas
-        assert len(tb) == 128
-
-
-class TestBatchedDecode:
-    """varint_decode_many / delta_decode_segments — the whole-Arrow-batch
-    decode kernels the engine's fast path rides (engine.py _decode)."""
-
-    @staticmethod
-    def _concat(streams):
-        import numpy as _np
-
-        from bayard_spark.build.codec import varint_encode
-
-        bufs = [varint_encode(_np.asarray(s, dtype=_np.uint64)) for s in streams]
-        offs = _np.zeros(len(bufs) + 1, dtype=_np.int64)
-        offs[1:] = _np.cumsum([len(b) for b in bufs])
-        return b"".join(bufs), offs
-
-    def test_matches_per_stream_decode(self):
-        from bayard_spark.build.codec import varint_decode_many
-
-        rng = np.random.default_rng(7)
-        streams = [
-            rng.integers(0, 2**bits, size=int(n)).astype(np.uint64)
-            for bits, n in [(7, 128), (14, 100), (32, 64), (62, 9), (7, 0)]
-        ]
-        buf, offs = self._concat(streams)
-        vals, voffs = varint_decode_many(buf, offs)
-        assert voffs.tolist() == np.cumsum(
-            [0] + [len(s) for s in streams]
-        ).tolist()
-        for k, s in enumerate(streams):
-            assert np.array_equal(vals[voffs[k] : voffs[k + 1]], s)
-
-    def test_all_single_byte_fast_path(self):
-        from bayard_spark.build.codec import varint_decode_many
-
-        streams = [[1, 5, 127], [], [0, 0, 3]]
-        buf, offs = self._concat(streams)
-        vals, voffs = varint_decode_many(buf, offs)
-        assert vals.tolist() == [1, 5, 127, 0, 0, 3]
-        assert voffs.tolist() == [0, 3, 3, 6]
-
-    def test_empty_buffer(self):
-        from bayard_spark.build.codec import varint_decode_many
-
-        vals, voffs = varint_decode_many(b"", np.zeros(4, dtype=np.int64))
-        assert vals.size == 0 and voffs.tolist() == [0, 0, 0, 0]
-
-    def test_segmented_delta_matches_blockwise(self):
-        from bayard_spark.build.codec import (
-            delta_decode_segments,
-            varint_decode_many,
-        )
-
-        rng = np.random.default_rng(11)
-        blocks = []
-        base = 0
-        for _ in range(40):
-            n = int(rng.integers(1, 129))
-            ids = base + np.cumsum(rng.integers(1, 1000, size=n)).astype(
-                np.uint64
+def _decode_arrow(blocks: pa.Table):
+    """Independent reader of the layout: per block, doc_id = first_doc_id +
+    offset, and the payload lists line up by index."""
+    out = []
+    for b in blocks.to_pylist():
+        pos = b["positions"]
+        for k, off in enumerate(b["doc_offsets"]):
+            out.append(
+                (b["first_doc_id"] + off, b["field"], b["term"], b["tfs"][k],
+                 b["lens"][k], None if pos is None else pos[k],
+                 b["bucket"], b["salt"])
             )
-            base = int(ids[-1]) + int(rng.integers(1, 10_000))
-            blocks.append(ids)
-        buf, offs = self._concat([delta_encode(b) for b in blocks])
-        deltas, voffs = varint_decode_many(buf, offs)
-        got = delta_decode_segments(deltas, voffs)
-        want = np.concatenate(
-            [delta_decode(delta_encode(b)) for b in blocks]
-        )
-        assert np.array_equal(got, want)
+    return sorted(out, key=lambda r: (r[1], r[2], r[7], r[0]))
 
-    @settings(max_examples=30, deadline=None)
+
+def _sorted_rows(rows):
+    return sorted(rows, key=lambda r: (r[1], r[2], r[7], r[0]))
+
+
+class TestEncoder:
+    def test_roundtrip_and_block_metadata(self):
+        rng = np.random.default_rng(7)
+        rows = _random_postings(rng)
+        blocks = encode_group_table(_table(rows), block_size=128)
+        assert _decode_arrow(blocks) == _sorted_rows(rows)
+        for b in blocks.to_pylist():
+            n = b["n_docs"]
+            assert 1 <= n <= 128
+            assert len(b["doc_offsets"]) == len(b["tfs"]) == len(b["lens"]) == n
+            assert b["doc_offsets"][0] == 0
+            assert b["doc_offsets"] == sorted(b["doc_offsets"])
+            assert b["first_doc_id"] + b["doc_offsets"][-1] == b["last_doc_id"]
+            assert (b["max_tf"], b["min_tf"]) == (max(b["tfs"]), min(b["tfs"]))
+            assert (b["min_len"], b["max_len"]) == (min(b["lens"]), max(b["lens"]))
+            assert (b["positions"] is None) == (b["field"] not in POS_FIELDS)
+        # blocks of one list are numbered 0.. and only the last is partial
+        per_list = {}
+        for b in blocks.to_pylist():
+            per_list.setdefault((b["field"], b["term"], b["salt"]), []).append(b)
+        for bl in per_list.values():
+            bl.sort(key=lambda b: b["block_id"])
+            assert [b["block_id"] for b in bl] == list(range(len(bl)))
+            assert all(b["n_docs"] == 128 for b in bl[:-1])
+
+    def test_empty_group(self):
+        empty = _table([(0, "text", "t", 1, 1, [0], 0, 0)]).slice(0, 0)
+        out = encode_group_table(empty)
+        assert out.num_rows == 0
+        assert out.schema.names == [c.split(" ")[0] for c in BLOCK_SCHEMA.split(", ")]
+
+    @settings(max_examples=40, deadline=None)
     @given(
         st.lists(
-            st.lists(
-                st.integers(min_value=0, max_value=2**63 - 1), max_size=60
+            st.tuples(
+                st.integers(0, 2**40),
+                st.sampled_from(["text", "url"]),
+                st.sampled_from(["a", "b", "c"]),
+                st.lists(st.integers(0, 2**31 - 1), min_size=1, max_size=6,
+                         unique=True),
+                st.integers(0, 2**31 - 1),
             ),
-            max_size=12,
-        )
+            min_size=1,
+            max_size=300,
+            unique_by=lambda r: (r[0], r[1], r[2]),
+        ),
+        st.integers(1, 16),
     )
-    def test_property_concat_roundtrip(self, streams):
-        from bayard_spark.build.codec import varint_decode_many
+    def test_roundtrip_property(self, postings, block_size):
+        rows = [
+            (d, f, t, len(p), ln, sorted(p) if f in POS_FIELDS else None, 0, 0)
+            for d, f, t, p, ln in postings
+        ]
+        blocks = encode_group_table(_table(rows), block_size=block_size)
+        assert _decode_arrow(blocks) == _sorted_rows(rows)
 
-        buf, offs = self._concat(streams)
-        vals, voffs = varint_decode_many(buf, offs)
-        for k, s in enumerate(streams):
-            assert vals[voffs[k] : voffs[k + 1]].tolist() == s
+
+def test_parquet_list_columns_explode_to_input(spark, tmp_path):
+    """Random postings, written as Parquet list columns and exploded by the
+    JVM reader, equal the input rows."""
+    rng = np.random.default_rng(21)
+    rows = _random_postings(rng)
+    blocks = encode_group_table(_table(rows), block_size=128)
+    path = str(tmp_path / "postings")
+    write_blocks(spark.createDataFrame(blocks), path)
+    back = explode_blocks(
+        spark.read.parquet(path), "field", "term", "bucket", "salt",
+        positions=True,
+    )
+    got = [
+        (r["doc_id"], r["field"], r["term"], r["tf"], r["len"],
+         r["positions"], r["bucket"], r["salt"])
+        for r in back.collect()
+    ]
+    assert _sorted_rows(got) == _sorted_rows(rows)
+    # the payload rides zstd Parquet list columns
+    import glob
+
+    import pyarrow.parquet as pq
+
+    f = glob.glob(path + "/**/*.parquet", recursive=True)[0]
+    col = pq.ParquetFile(f).metadata.row_group(0)
+    names = {col.column(i).path_in_schema: col.column(i).compression
+             for i in range(col.num_columns)}
+    assert names["doc_offsets.list.element"] == "ZSTD"
+
+
+def test_old_blob_layout_requires_rebuild(spark, tmp_path):
+    """An index written with the earlier varint-blob columns fails to open
+    with a typed error instead of a decode crash."""
+    from bayard_spark.fsio import IndexFS
+    from bayard_spark.query import SearchEngine
+    from bayard_spark.schema import IndexPaths, webtext_index_meta
+
+    root = str(tmp_path / "old")
+    paths = IndexPaths(root)
+    IndexFS(root).makedirs(root)
+    IndexFS(root).write_text(paths.meta, webtext_index_meta().to_json())
+    old = spark.createDataFrame(
+        [("text", 0, "water", 0, 0, 1, 5, 5, 1, 1, 3, 3,
+          b"\x05", b"\x01", b"\x03", b"")],
+        "field string, bucket int, term string, salt int, block_id int, "
+        "n_docs int, first_doc_id long, last_doc_id long, max_tf int, "
+        "min_tf int, min_len int, max_len int, doc_bytes binary, "
+        "tf_bytes binary, len_bytes binary, pos_bytes binary",
+    )
+    old.write.partitionBy("field", "bucket").parquet(paths.postings + "/wave=0")
+    with pytest.raises(IndexFormatError, match="rebuild required"):
+        SearchEngine(spark, root)

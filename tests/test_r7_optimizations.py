@@ -27,7 +27,7 @@ def _rows_of(batch):
     d = batch.to_pydict()
     return list(
         zip(d["doc_id"], d["field"], d["term"], d["tf"], d["doc_len"],
-            d["pos_bytes"])
+            d["positions"])
     )
 
 
@@ -87,11 +87,7 @@ class TestRunsPackedSort:
         )
         rows = _rows_of(got)
         assert len(rows) == 1 and rows[0][3] == 3  # tf aggregated
-        # delta+varint of sorted positions 0,1,1? -> absolute first = 0
-        from bayard_spark.build.codec import varint_decode
-
-        deltas = varint_decode(rows[0][5])
-        assert deltas.tolist() == [0, 1, 1]
+        assert rows[0][5] == [0, 1, 2]
 
 
 class TestGopherRowLocal:
@@ -249,61 +245,3 @@ class TestWarcBounds:
         assert len(rows) == 1
         assert rows[0]["parse_error"] is not None
         assert "cap" in rows[0]["parse_error"]
-
-
-class TestEncodeGroupZeroCopy:
-    """encode_group_table (zero-copy per-block payload columns, r7) must
-    stay byte-identical to encode_group_frame, the independent pandas
-    encoder the incremental segment writer uses."""
-
-    def test_identical_blocks(self):
-        import pandas as pd
-
-        from bayard_spark.build.indexer import (
-            encode_group_frame,
-            encode_group_table,
-        )
-        from bayard_spark.build.codec import varint_encode
-
-        rng = np.random.default_rng(11)
-        rows = []
-        for fld in ("text", "url"):
-            for t in range(6):
-                term = f"term{t}"
-                salts = [0, 1] if t == 0 else [0]
-                for salt in salts:
-                    docs = np.sort(
-                        rng.choice(100_000, size=300, replace=False)
-                    )
-                    for d in docs:
-                        pos = np.sort(
-                            rng.choice(50, size=3, replace=False)
-                        ).astype(np.uint64)
-                        deltas = pos.copy()
-                        deltas[1:] -= pos[:-1]
-                        rows.append(
-                            (
-                                int(d), fld, term,
-                                3, int(rng.integers(1, 200)),
-                                bytes(varint_encode(deltas)),
-                                7, salt,
-                            )
-                        )
-        cols = ["doc_id", "field", "term", "tf", "doc_len", "pos_bytes",
-                "bucket", "salt"]
-        pdf = pd.DataFrame(rows, columns=cols)
-        want = encode_group_frame(pdf.copy(), block_size=128)
-        got = (
-            encode_group_table(
-                pa.Table.from_pandas(pdf, preserve_index=False),
-                block_size=128,
-            )
-            .to_pandas()
-        )
-        key = ["field", "term", "salt", "block_id"]
-        want = want.sort_values(key, ignore_index=True)
-        got = got.sort_values(key, ignore_index=True)
-        assert list(want.columns) == list(got.columns)
-        for c in want.columns:
-            a, b = want[c].tolist(), got[c].tolist()
-            assert a == b, f"column {c} diverges"

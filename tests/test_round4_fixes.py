@@ -197,63 +197,32 @@ def test_preload_cap_is_byte_sized(spark, tmp_path_factory):
     assert resp.total_hits >= 0
 
 
-# ---- phrase candidate-filtered decode (round 4 scale plan) ----
+# ---- phrase rank identity over skewed constituent shapes ----
 
 
 def test_phrase_semi_decode_rank_identity(built):
-    """Forcing the candidate-filtered decode path must not change any
-    phrase result: same doc ids AND scores as the oracle, for rare+hot
-    and hot+hot shapes."""
+    """Phrases whose constituents differ widely in df (rare+hot, hot+hot)
+    keep the oracle's doc ids AND scores."""
     engine, oracle = built
     shapes = [
         ["the", "water"], ["water", "the"], ["of", "the"],
         ["people", "know"],
     ]
-    engine._leaf_cache.clear()
-    engine.PHRASE_SEMI_RATIO = 1  # open the gate for every phrase
-    engine.PHRASE_SEMI_MAX = 10**9
-    try:
-        for terms in shapes:
-            q = {"kind": "phrase",
-                 "options": {"field": "text", "phrase_terms": terms,
-                             "slop": 0}}
-            resp = engine.search(
-                {"query": q, "collection_kind": "count_and_top_docs",
-                 "hits": 10}
-            )
-            ranked = oracle.top_k(q, 10)
-            want_urls = [oracle.docs[i]["url"] for i, _s in ranked]
-            got_urls = [d["id"] for d in resp.documents]
-            assert got_urls == want_urls, terms
-            for d, (_i, s) in zip(resp.documents, ranked):
-                assert abs(d["score"] - s) < 1e-9
-            assert resp.total_hits == len(oracle.run(q))
-    finally:
-        del engine.PHRASE_SEMI_RATIO, engine.PHRASE_SEMI_MAX
-        engine._leaf_cache.clear()
-
-
-def test_phrase_semi_gate_opens_only_on_skew(built, monkeypatch):
-    engine, _ = built
-    seen = []
-    real = engine._decode
-
-    def spy(blocks, want_positions, candidate_ids=None, **kwargs):
-        seen.append(candidate_ids is not None)
-        return real(blocks, want_positions, candidate_ids, **kwargs)
-
-    monkeypatch.setattr(engine, "_decode", spy)
-    engine._leaf_cache.clear()
-    # similar dfs: gate stays closed -> no candidate decode anywhere
-    engine.search(
-        {"query": {"kind": "phrase",
-                   "options": {"field": "text",
-                               "phrase_terms": ["people", "know"],
-                               "slop": 0}},
-         "collection_kind": "top_docs", "hits": 5}
-    )
-    assert not any(seen)
-    engine._leaf_cache.clear()
+    for terms in shapes:
+        q = {"kind": "phrase",
+             "options": {"field": "text", "phrase_terms": terms,
+                         "slop": 0}}
+        resp = engine.search(
+            {"query": q, "collection_kind": "count_and_top_docs",
+             "hits": 10}
+        )
+        ranked = oracle.top_k(q, 10)
+        want_urls = [oracle.docs[i]["url"] for i, _s in ranked]
+        got_urls = [d["id"] for d in resp.documents]
+        assert got_urls == want_urls, terms
+        for d, (_i, s) in zip(resp.documents, ranked):
+            assert abs(d["score"] - s) < 1e-9
+        assert resp.total_hits == len(oracle.run(q))
 
 
 def test_engine_is_thread_safe_for_concurrent_search(built):

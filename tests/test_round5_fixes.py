@@ -4,9 +4,8 @@
    ingest shape: put→commit→put→commit) starts a NEW reservation window
    after each commit instead of tripping over its own already-committed
    id range.
-2. ADVICE medium — the candidate-filtered phrase decode returns an empty
-   result (not an executor IndexError) when every doc holding the rare
-   term was tombstoned.
+2. ADVICE medium — a phrase returns an empty result (not an executor
+   error) when every doc holding its rare term was tombstoned.
 3. VERDICT Wrong #1 — the response path switches from the carry-through
    docs join to the ≤k point-lookup above the doc-store size gate, with
    identical results on both branches.
@@ -17,7 +16,6 @@
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -80,7 +78,7 @@ def test_three_epoch_streaming_ingest(spark, tmp_path_factory):
     assert docs.filter(F.col("url").rlike("put60[123]")).count() == 12
 
 
-# ---- 2. empty candidate set in candidate-filtered phrase decode ----
+# ---- 2. phrase over a constituent whose every holder is tombstoned ----
 
 
 def test_phrase_semi_decode_all_candidates_tombstoned(
@@ -106,8 +104,6 @@ def test_phrase_semi_decode_all_candidates_tombstoned(
     w.delete_documents(holders)
     w.commit()
     engine = SearchEngine(spark, root)
-    engine.PHRASE_SEMI_RATIO = 1  # force the candidate-filtered path
-    engine.PHRASE_SEMI_MAX = 10**9
     resp = engine.search(
         {"query": {"kind": "phrase",
                    "options": {"field": "text",
@@ -116,16 +112,6 @@ def test_phrase_semi_decode_all_candidates_tombstoned(
          "collection_kind": "count_and_top_docs", "hits": 10}
     )
     assert resp.total_hits == 0 and resp.documents == []
-
-
-def test_decode_guard_on_empty_candidate_array(built):
-    engine, _ = built
-    blocks = engine._leaf_blocks("text", "the")
-    out = engine._decode(
-        blocks, want_positions=True,
-        candidate_ids=np.array([], dtype=np.int64),
-    )
-    assert out.count() == 0
 
 
 # ---- 3. size-gated response path ----

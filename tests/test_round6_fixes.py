@@ -1,9 +1,7 @@
 """Regression tests for the round-6 hot-term query-path work.
 
-1. Batched posting decode (codec.varint_decode_many over whole Arrow
-   batches) produces EXACTLY the per-block decoder's rows — pinned by
-   comparing the fast path (want_positions=False) against the per-block
-   fallback path (want_positions=True) over the same blocks.
+1. The posting explode yields the same (term, doc_id, tf, len) rows
+   whether or not it also carries the positions list column.
 2. The decode repartition hint: above DECODE_PARALLEL_MIN_DOCS the block
    frame gains a round-robin exchange (a hot term's posting list decodes
    across the cluster, not on the one task that scans its bucket file);
@@ -19,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-# ---- 1. batched decode == per-block decode ----
+# ---- 1. decode with positions == decode without ----
 
 
 def test_batched_decode_matches_per_block_path(built):
